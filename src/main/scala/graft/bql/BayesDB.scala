@@ -105,6 +105,9 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
   private var catalog0 = new Catalog
   def catalog: Catalog = catalog0
   private val tables = TrieMap.empty[String, DataFrame]
+  /** Row count n of each table whose rowids registerTable numbered 1..n
+    * itself; a table that arrived with its own `rowid` has no entry. */
+  private val rowCounts = TrieMap.empty[String, Long]
   private val states = TrieMap.empty[String, GeneratorState]
   private val customBackends = TrieMap.empty[String, graft.backends.Backend]
 
@@ -130,18 +133,20 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
     * (nestable — src/txn.py:35-41). Snapshots are immutable, so an inner
     * rollback never invalidates an outer frame. */
   private final case class TxnFrame(
-      cat: Catalog, tabs: Map[String, DataFrame],
+      cat: Catalog, tabs: Map[String, DataFrame], counts: Map[String, Long],
       sts: Map[String, GeneratorState], isTransaction: Boolean)
   private var txnStack: List[TxnFrame] = Nil
 
   private def pushFrame(isTransaction: Boolean): TxnFrame = {
-    val f = TxnFrame(catalog0.snapshot(), tables.toMap, states.toMap, isTransaction)
+    val f = TxnFrame(catalog0.snapshot(), tables.toMap, rowCounts.toMap, states.toMap,
+      isTransaction)
     txnStack = f :: txnStack
     f
   }
   private def restoreFrame(f: TxnFrame): Unit = {
     catalog0 = f.cat
     tables.clear(); tables ++= f.tabs
+    rowCounts.clear(); rowCounts ++= f.counts
     states.clear(); states ++= f.sts
   }
 
@@ -210,6 +215,7 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
     val key = Names.casefold(name)
     if (df.columns.exists(c => Names.casefold(c) == "rowid")) {
       tables(key) = df
+      rowCounts.remove(key)
     } else {
       // pin ONE physical instance of the input across ensureRowid's two
       // jobs (the per-partition count agg, then the materialization): an
@@ -220,7 +226,8 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
       // result is materialized (parquet write, or eager cache count).
       val pinned = df.cache()
       try {
-        val withRowid = ensureRowid(pinned)
+        val (withRowid, n) = ensureRowid(pinned)
+        rowCounts(key) = n
         tables(key) = tableStore match {
           case Some(dir) =>
             val path = s"$dir/$key.parquet"
@@ -235,9 +242,9 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
     }
   }
 
-  /** Materialize 1-based insertion-order rowids WITHOUT leaving the
-    * DataFrame world: `monotonically_increasing_id()` is
-    * `partitionId << 33 | offsetInPartition`, so per-partition row counts
+  /** Materialize 1-based insertion-order rowids, and count the rows,
+    * WITHOUT leaving the DataFrame world: `monotonically_increasing_id()`
+    * is `partitionId << 33 | offsetInPartition`, so per-partition row counts
     * (one small agg, collected — numPartitions rows) plus the recovered
     * in-partition offset reproduce `rdd.zipWithIndex`'s numbering exactly
     * (partition index order, then scan order) while the data path stays
@@ -245,24 +252,27 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
     * the partition id — no single-partition window, no RDD round-trip.
     * Numbering parity with the old zipWithIndex path is pinned by
     * BqlExecSpec ("rowid matches zipWithIndex numbering"). */
-  private def ensureRowid(df: DataFrame): DataFrame =
-    if (df.columns.exists(c => Names.casefold(c) == "rowid")) df
-    else {
-      val counts = df.groupBy(spark_partition_id().as("__pid")).count()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (p, n)) => (p, acc + n) }
-        .init.zip(counts).map { case ((_, off), (p, _)) => (p, off) }
-      val offDf = broadcast(
-        spark.createDataFrame(offsets.toSeq).toDF("__pid", "__off"))
-      df.withColumn("__pid", spark_partition_id())
-        .withColumn("__mid", monotonically_increasing_id())
-        .join(offDf, "__pid")
-        .withColumn("rowid",
-          col("__off") + (col("__mid") - col("__pid").cast(LongType) * lit(1L << 33)) + lit(1L))
-        .drop("__pid", "__mid", "__off")
-    }
+  private def ensureRowid(df: DataFrame): (DataFrame, Long) = {
+    val counts = df.groupBy(spark_partition_id().as("__pid")).count()
+      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (p, n)) => (p, acc + n) }
+      .init.zip(counts).map { case ((_, off), (p, _)) => (p, off) }
+    val offDf = broadcast(
+      spark.createDataFrame(offsets.toSeq).toDF("__pid", "__off"))
+    val numbered = df.withColumn("__pid", spark_partition_id())
+      .withColumn("__mid", monotonically_increasing_id())
+      .join(offDf, "__pid")
+      .withColumn("rowid",
+        col("__off") + (col("__mid") - col("__pid").cast(LongType) * lit(1L << 33)) + lit(1L))
+      .drop("__pid", "__mid", "__off")
+    (numbered, counts.map(_._2).sum)
+  }
 
   def hasTable(name: String): Boolean = tables.contains(Names.casefold(name))
+
+  /** n when the table's rowids are exactly 1..n because registerTable
+    * numbered them, so a literal rowid resolves without reading it. */
+  def numberedRows(name: String): Option[Long] = rowCounts.get(Names.casefold(name))
 
   /** `bayesdb_nullify`: map a sentinel value to NULL in one column
     * (reference: src/nullify.py:20-30 — UPDATE t SET c=NULL WHERE c=v;
@@ -656,6 +666,7 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
         require(referencing.isEmpty,
           s"Table $name is in use by populations: ${referencing.mkString(", ")}")
         tables.remove(key)
+        rowCounts.remove(key)
       }
       emptyResult
 
@@ -667,9 +678,12 @@ final class BayesDB(val spark: SparkSession, val seed: Long = 42L,
             require(!hasTable(nw), s"Table already exists: $nw")
             tables.remove(Names.casefold(tableName))
             tables(Names.casefold(nw)) = df
+            rowCounts.remove(Names.casefold(tableName))
+              .foreach(n => rowCounts(Names.casefold(nw)) = n)
           case Ast.AlterTabRenameCol(old, nw) =>
             val key = Names.casefold(tableName)
             tables(key) = table(tableName).withColumnRenamed(old, nw)
+            if (Set(old, nw).map(Names.casefold).contains("rowid")) rowCounts.remove(key)
         }
       }
       emptyResult

@@ -1,10 +1,14 @@
 package graft.bql
 
-import graft.catalog.Names
+import graft.catalog.{Names, Variable}
 import graft.engine.{Estimators, PopulationModel}
 import graft.functions.Correlation
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType,
+  StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 import Ast._
 
@@ -41,14 +45,16 @@ object Planner {
   /** INFER: row context that additionally admits PREDICT. */
   final case class InferCtx(pm: PopulationModel,
       available: Option[Set[String]] = None) extends BqlCtx
-  /** ESTIMATE ... FROM VARIABLES OF p: 1-column functions over `name`. */
-  final case class ColCtx(pm: PopulationModel) extends BqlCtx
-  /** ESTIMATE ... FROM PAIRWISE VARIABLES OF p: 2-column functions. */
-  /** `subset`: the FOR-subcolumns restriction, so pair estimators compute
-    * driver values only for the restricted pairs (a 64-variable population
-    * with FOR over 2 columns needs 4, not 4096, estimator calls). */
+  /** ESTIMATE ... FROM VARIABLES OF p: 1-column functions over `name`.
+    * `values` maps each estimator whose value depends on the row's
+    * variable to the hidden column of the variables frame that holds its
+    * driver-computed value (see [[variablesFrame]]). */
+  final case class ColCtx(pm: PopulationModel,
+      values: Map[Exp, String] = Map.empty) extends BqlCtx
+  /** ESTIMATE ... FROM PAIRWISE VARIABLES OF p: 2-column functions over
+    * `name0`/`name1`; `values` as in [[ColCtx]], per pair. */
   final case class PairColCtx(pm: PopulationModel,
-      subset: Option[Seq[String]] = None) extends BqlCtx
+      values: Map[Exp, String] = Map.empty) extends BqlCtx
   /** ESTIMATE ... FROM PAIRWISE p: 2-row functions over rowid0/rowid1. */
   final case class PairRowCtx(pm: PopulationModel) extends BqlCtx
 
@@ -56,7 +62,7 @@ object Planner {
     case ConstCtx(pm) => pm
     case RowCtx(pm, _) => pm
     case InferCtx(pm, _) => pm
-    case ColCtx(pm) => pm
+    case ColCtx(pm, _) => pm
     case PairColCtx(pm, _) => pm
     case PairRowCtx(pm) => pm
     case NoModelCtx => throw new IllegalArgumentException(
@@ -109,8 +115,8 @@ object Planner {
     * each expression evaluated against that single model (reference:
     * src/compiler.py:724-835 + the bql_mutinf virtual table
     * src/bqlvtab.py:33-209 + macro expansion src/macro.py:37-111 — here
-    * the per-model values are computed directly and materialized as a
-    * DataFrame; no vtab or rowid-equijoin needed). */
+    * the per-model values are computed directly and returned as one
+    * LocalRelation; no vtab or rowid-equijoin needed). */
   private def planSimulateModels(bdb: BayesDB, columns: Seq[SelCol],
       population: String, generator: Option[String], binds: Seq[Any]): DataFrame = {
     val pm = bdb.populationModel(population, generator)
@@ -130,13 +136,10 @@ object Planner {
         s"SIMULATE FROM MODELS OF needs expressions: $other")
     }
     val rows = modelnos.map { m =>
-      org.apache.spark.sql.Row.fromSeq(items.map { case (_, e) =>
-        evalModelExp(bdb, pm, m, e, binds) })
+      Row.fromSeq(items.map { case (_, e) => evalModelExp(bdb, pm, m, e, binds) })
     }
-    val schema = org.apache.spark.sql.types.StructType(items.map { case (n, _) =>
-      org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.DoubleType) })
-    bdb.spark.createDataFrame(
-      bdb.spark.sparkContext.parallelize(rows, 1), schema)
+    val schema = StructType(items.map { case (n, _) => StructField(n, DoubleType) })
+    bdb.spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Evaluate an expression against ONE ensemble member: BQL constant
@@ -191,15 +194,10 @@ object Planner {
           pm.colno(c) -> Estimators.encodeValue(pm, c, evalConst(bdb, v, binds)) }
         math.exp(gen.backend.logpdfJoint(gen.state, one, t, cs))
       case ExpBQLSim(Some(of), Some(to), cl) =>
-        val colno = contextColno(pm, cl, Ctx(bdb, ConstCtx(pm), binds, agg = false))
-        val ctx = Ctx(bdb, NoModelCtx, binds, agg = false)
-        val t = bdb.table(pm.population.table)
-        def rid(cond: Exp): Long = {
-          val rows = t.filter(compile(cond, ctx)).select(col("rowid")).limit(1).collect()
-          require(rows.nonEmpty, s"No row matches: $cond")
-          rows.head.getLong(0)
-        }
-        val ss = gen.backend.rowSimilarity(gen.state, one, rid(of), rid(to), Seq(colno))
+        val ctx = Ctx(bdb, ConstCtx(pm), binds, agg = false)
+        val colno = contextColno(pm, cl, ctx)
+        val ss = gen.backend.rowSimilarity(gen.state, one,
+          resolveRowid(pm, of, ctx), resolveRowid(pm, to, ctx), Seq(colno))
         ss.sum / ss.length
       case other => throw new IllegalArgumentException(
         s"Cannot evaluate per-model: $other")
@@ -225,7 +223,7 @@ object Planner {
       (alias, df)
     }
     val base =
-      if (tabs.isEmpty) bdb.spark.range(1).toDF("__dummy__")
+      if (tabs.isEmpty) oneRow(bdb)
       else tabs.map { case (a, df) => df.as(a) }.reduceLeft(_ crossJoin _)
     val scope = Scope(
       tabs.flatMap(_._2.columns).map(Names.casefold).toSet,
@@ -237,6 +235,13 @@ object Planner {
       s.order, s.limit, ctx,
       starColumns = starCols(s.tables, bdb, binds))
   }
+
+  /** The base frame of a FROM-less SELECT and of ESTIMATE ... BY: one
+    * row as a LocalRelation, so a projection of constants folds into it
+    * and collecting the result runs no Spark job. */
+  private def oneRow(bdb: BayesDB): DataFrame =
+    bdb.spark.createDataFrame(java.util.List.of(Row(0L)),
+      StructType(Seq(StructField("__dummy__", LongType, nullable = false))))
 
   /** Column names `*` expands to: all FROM-table columns minus the
     * materialized rowid (SQLite's implicit _rowid_ is likewise hidden
@@ -268,23 +273,37 @@ object Planner {
 
   private def planEstBy(bdb: BayesDB, e: EstBy, binds: Seq[Any]): DataFrame = {
     val pm = bdb.populationModel(e.population, e.generator, e.modelnos)
-    val base = bdb.spark.range(1).toDF("__dummy__")
+    val base = oneRow(bdb)
     val ctx = Ctx(bdb, ConstCtx(pm), binds, agg = false)
     assemble(base, Nil, e.columns, e.quantifier, None, None, Nil, None, ctx,
       starColumns = Nil)
   }
 
-  /** Variables-of-population frame (reference compiles to a scan of
-    * bayesdb_variable, src/compiler.py:844-919). */
-  private def variablesDf(bdb: BayesDB, pm: PopulationModel): DataFrame = {
-    val spark = bdb.spark
-    import spark.implicits._
-    // aliased `v` like the reference's compiled `bayesdb_variable AS v`
-    // (src/compiler.py:844-919) so `WHERE v.name != ...` resolves
-    pm.visibleVariables
-      .map(v => (v.name, v.colno, v.stattype.name))
-      .toDF("name", "colno", "stattype")
-      .as("v")
+  /** The frame of a column context, built on the driver as ONE
+    * LocalRelation: a row per variable (VARIABLES OF) or per ordered pair
+    * (PAIRWISE VARIABLES OF) with its `keys` values (reference: a scan of
+    * bayesdb_variable, src/compiler.py:844-1004). Each estimator in
+    * `exps` whose value depends on the row's variables is computed here,
+    * once per row, into a hidden column `__est_k`, and the returned
+    * context compiles it to a reference to that column. Catalyst then
+    * folds WHERE, the projection and LIMIT into the relation, and
+    * collecting the result runs no Spark job. */
+  private def variablesFrame(ctx0: Ctx, exps: Seq[Exp], keys: Seq[StructField],
+      rows: Seq[Seq[Variable]], keyValues: Seq[Variable] => Seq[Any]): (DataFrame, Ctx) = {
+    val ests = exps.flatMap(rowEstimators(_, ctx0)).distinctBy(_._1)
+    val hidden = ests.indices.map(k => s"__est_$k")
+    val data = rows.map { vs =>
+      val names = vs.map(_.name)
+      Row.fromSeq(keyValues(vs) ++ ests.map(_._2(names)))
+    }
+    val schema = StructType(keys ++ hidden.map(StructField(_, DoubleType)))
+    val values = ests.map(_._1).zip(hidden).toMap
+    val bql = ctx0.bql match {
+      case c: ColCtx => c.copy(values = values)
+      case c: PairColCtx => c.copy(values = values)
+      case other => other
+    }
+    (ctx0.bdb.spark.createDataFrame(data.asJava, schema), ctx0.copy(bql = bql))
   }
 
   /** Whether any expression uses a MODEL-needing estimator form. Data-only
@@ -317,8 +336,14 @@ object Planner {
       e.condition.toSeq ++ e.order.map(_.expression)
     val pm = bdb.populationModel(e.population, e.generator, e.modelnos,
       needModels = needsModels(exps) || e.modelnos.isDefined)
-    val base = variablesDf(bdb, pm)
-    val ctx = Ctx(bdb, ColCtx(pm), binds, agg = false)
+    val (frame, ctx) = variablesFrame(Ctx(bdb, ColCtx(pm), binds, agg = false), exps,
+      Seq(StructField("name", StringType), StructField("colno", IntegerType),
+        StructField("stattype", StringType)),
+      pm.visibleVariables.map(Seq(_)),
+      { case Seq(v) => Seq(v.name, v.colno, v.stattype.name) })
+    // aliased `v` like the reference's compiled `bayesdb_variable AS v`
+    // (src/compiler.py:844-919) so `WHERE v.name != ...` resolves
+    val base = frame.as("v")
     // `*` means just the variable name column (reference: 'v.name AS name')
     val columns = e.columns.map {
       case SelColAll(_) => SelColExp(ExpCol(None, "name"), Some("name"))
@@ -333,18 +358,20 @@ object Planner {
       e.condition.toSeq ++ e.order.map(_.expression)
     val pm = bdb.populationModel(e.population, e.generator, e.modelnos,
       needModels = needsModels(exps) || e.modelnos.isDefined)
-    val vars = variablesDf(bdb, pm)
-    val base = vars.select(col("name").as("name0"), col("colno").as("colno0"))
-      .crossJoin(vars.select(col("name").as("name1"), col("colno").as("colno1")))
-    val subNames = e.subcolumns.map(
-      _.flatMap(resolveColList(bdb, pm, _, binds)).map(Names.casefold))
-    val filtered = subNames match {
-      case None => base
-      case Some(names) =>
-        base.filter(lower(col("name0")).isin(names: _*) &&
-          lower(col("name1")).isin(names: _*))
+    // the FOR-subcolumns restriction applies before any estimator runs: a
+    // 64-variable population with FOR over 2 columns computes 4 pairs,
+    // not 4,096
+    val vars = e.subcolumns match {
+      case None => pm.visibleVariables
+      case Some(cls) =>
+        val want = cls.flatMap(resolveColList(bdb, pm, _, binds)).map(Names.casefold).toSet
+        pm.visibleVariables.filter(v => want(Names.casefold(v.name)))
     }
-    val ctx = Ctx(bdb, PairColCtx(pm, subNames), binds, agg = false)
+    val (base, ctx) = variablesFrame(Ctx(bdb, PairColCtx(pm), binds, agg = false), exps,
+      Seq(StructField("name0", StringType), StructField("colno0", IntegerType),
+        StructField("name1", StringType), StructField("colno1", IntegerType)),
+      for (a <- vars; b <- vars) yield Seq(a, b),
+      { case Seq(a, b) => Seq(a.name, a.colno, b.name, b.colno) })
     // output prefix (population_id, name0, name1); single unnamed
     // expression is named `value` (reference: src/compiler.py:941-953)
     val prefix = Seq(
@@ -355,7 +382,7 @@ object Planner {
       case Seq(SelColExp(exp, None)) => Seq(SelColExp(exp, Some("value")))
       case cs => cs
     }
-    assemble(filtered, prefix, columns, SelQuantAll, e.condition, None,
+    assemble(base, prefix, columns, SelQuantAll, e.condition, None,
       e.order, e.limit, ctx, starColumns = Nil)
   }
 
@@ -454,6 +481,12 @@ object Planner {
       rowidTokens(Names.casefold(c)) }
     require(ridGivens.length <= 1,
       "SIMULATE GIVEN accepts at most one rowid designator")
+    // a target fixed by GIVEN has no distribution left to draw from;
+    // cgpm rejects the overlap rather than return a free draw
+    val overlap = targets.filter(t =>
+      varGivens.exists { case (c, _) => Names.casefold(c) == Names.casefold(t) })
+    require(overlap.isEmpty,
+      s"SIMULATE targets must not be named in GIVEN: ${overlap.mkString(", ")}")
     val givenRowid = ridGivens.headOption.map { case (_, e) =>
       evalConstInt(bdb, bindParams(e, binds), binds).toLong }
     val constraints = varGivens.map { case (c, e) =>
@@ -2780,15 +2813,49 @@ object Planner {
     pm.colno(names.head)
   }
 
-  /** Resolve a row-designating condition to its rowid: plan-time
-    * `SELECT rowid FROM t WHERE cond LIMIT 1` (the reference embeds the
-    * same scalar subquery in SQL, src/compiler.py:1565-1587). */
+  /** Resolve a row-designating condition to its rowid (the reference
+    * embeds `SELECT rowid FROM t WHERE cond LIMIT 1` as a scalar subquery,
+    * src/compiler.py:1565-1587). `rowid = k` for an integer literal or
+    * bound parameter k, over a table whose rowids the engine numbered
+    * 1..n itself, resolves without reading the table; any other
+    * condition runs that lookup. */
   private def resolveRowid(pm: PopulationModel, cond: Exp, ctx: Ctx): Long = {
-    val t = ctx.bdb.table(pm.population.table)
-    val rows = t.filter(compile(cond, ctx.copy(bql = NoModelCtx)))
-      .select(col("rowid")).limit(1).collect()
-    require(rows.nonEmpty, s"No row matches: $cond")
-    rows.head.getLong(0)
+    val table = pm.population.table
+    (literalRowid(cond, ctx.binds), ctx.bdb.numberedRows(table)) match {
+      case (Some(k), Some(n)) =>
+        require(k >= 1 && k <= n, s"No row matches: $cond")
+        k
+      case _ =>
+        val rows = ctx.bdb.table(table).filter(compile(cond, ctx.copy(bql = NoModelCtx)))
+          .select(col("rowid")).limit(1).collect()
+        require(rows.nonEmpty, s"No row matches: $cond")
+        rows.head.getLong(0)
+    }
+  }
+
+  /** k of a `rowid = k` / `k = rowid` condition (any rowid alias), for an
+    * integer literal or a bound integral parameter. */
+  private def literalRowid(cond: Exp, binds: Seq[Any]): Option[Long] = {
+    def isRowid(e: Exp) = e match {
+      case ExpCol(None, c) => Set("rowid", "_rowid_", "oid")(Names.casefold(c))
+      case _ => false
+    }
+    def integral(e: Exp): Option[Long] = (e match {
+      case ExpLit(LitInt(v)) => Some(v)
+      case ExpNumpar(n) => Some(bindValue(binds, n))
+      case ExpNampar(n, _) => Some(bindValue(binds, n))
+      case _ => None
+    }).collect {
+      case v: Long => v
+      case v: Int => v.toLong
+      case v: Short => v.toLong
+      case v: Byte => v.toLong
+    }
+    cond match {
+      case ExpOp(Op.Eq, Seq(l, r)) if isRowid(l) => integral(r)
+      case ExpOp(Op.Eq, Seq(l, r)) if isRowid(r) => integral(l)
+      case _ => None
+    }
   }
 
   private def compileBql(e: Exp, ctx: Ctx): Column = {
@@ -2808,9 +2875,11 @@ object Planner {
         }.distinct
         Estimators.predictiveProbabilityCol(pm, tNames, cNames0)
 
+      // a row outside the MCMC subsample has no similarity or relevance
+      // (NaN from the backend): both surface it as NULL
       case ExpBQLSim(ofCond, toCond, contextCl) =>
         val colno = contextColno(pm, contextCl, ctx)
-        (ofCond, toCond, ctx.bql) match {
+        nullIfNaN((ofCond, toCond, ctx.bql) match {
           case (Some(of), Some(to), _) =>  // const form
             val r0 = resolveRowid(pm, of, ctx)
             val r1 = resolveRowid(pm, to, ctx)
@@ -2822,7 +2891,7 @@ object Planner {
             Estimators.pairSimilarityCol(pm, colno, col("rowid0"), col("rowid1"))
           case _ => throw new IllegalArgumentException(
             "SIMILARITY form does not match its context")
-        }
+        })
 
       case ExpBQLPredRel(ofCond, toCond, hypotheticals, contextCl) =>
         // form constraints (reference: src/bql_math? — tests/test_bql.py:
@@ -2859,7 +2928,7 @@ object Planner {
           case None => Nil
         }
         // empty existing/hypothetical sets are legal (reference compiles
-        // '[]'); the backend yields NaN → NULL for the degenerate case
+        // '[]'); the backend yields NaN, surfaced as NULL below
         val hyp = hypotheticals.map(_.map { case (c, v) =>
           pm.colno(c) -> encodeConst(ctx, pm, c, v)
         })
@@ -2871,14 +2940,14 @@ object Planner {
               s"${g.backend.name} cannot handle hypothetical rows because" +
                 " it is unable to insert rows into CrossCat")
         }
-        ofCond match {
+        nullIfNaN(ofCond match {
           case Some(of) =>  // const form
             val r0 = resolveRowid(pm, of, ctx)
             lit(Estimators.predictiveRelevanceValue(pm, r0, queryRowids, hyp, colno))
           case None =>
             require(isRowCtx, "PREDICTIVE RELEVANCE requires a row context or OF (<row>)")
             Estimators.predictiveRelevanceCol(pm, queryRowids, hyp, colno, col("rowid"))
-        }
+        })
 
       case ExpBQLPredict(c, conf, nsamp) =>
         require(isRowCtx, "PREDICT requires a row context (INFER)")
@@ -2894,35 +2963,29 @@ object Planner {
           availableOf(ctx))
 
       // ---------------- column functions (const / 1-col / 2-col)
+      // the 1-col and 2-col forms read the value variablesFrame computed
+      // into the frame; rowValueFn computes those forms
       case ExpBQLDepProb(c0, c1) =>
-        colFn2("DEPENDENCE PROBABILITY", c0, c1, ctx, pm)(
-          (a, b) => Estimators.dependenceProbability(pm, a, b))
+        colFn2("DEPENDENCE PROBABILITY", e, c0, c1, ctx)(
+          Estimators.dependenceProbability(pm, _, _))
 
       // degenerate inputs (constant column, single category, too few
       // observations, empty table) compute NaN internally; the reference
       // returns NULL for them (src/stats.py guards return None,
       // tests/test_correlation.py pins it) — surface NULL
       case ExpBQLCorrel(c0, c1) =>
-        nanvl(colFn2("CORRELATION", c0, c1, ctx, pm)(correlationValue(ctx, pm)),
-          lit(null).cast("double"))
+        nullIfNaN(colFn2("CORRELATION", e, c0, c1, ctx)(correlationValue(ctx, pm)))
 
       case ExpBQLCorrelPval(c0, c1) =>
-        nanvl(colFn2("CORRELATION PVALUE", c0, c1, ctx, pm)(correlationPValue(ctx, pm)),
-          lit(null).cast("double"))
+        nullIfNaN(colFn2("CORRELATION PVALUE", e, c0, c1, ctx)(correlationPValue(ctx, pm)))
 
-      case ExpBQLMutInf(cols0, cols1, constraints, nsamp) =>
-        val n = nsamp.map(e => evalConstInt(ctx.bdb, e, ctx.binds)).getOrElse(1000)
-        val cs = constraints.map {
-          case MiEquality(c, v) => c -> Some(encodeConst(ctx, pm, c, v))
-          case MiMarginal(c) => c -> None
-        }
+      case mi @ ExpBQLMutInf(cols0, cols1, _, _) =>
         (cols0, cols1, ctx.bql) match {
           case (c0, c1, _) if c0.nonEmpty && c1.nonEmpty =>  // const
+            val (n, cs) = miArgs(mi, ctx)
             lit(Estimators.mutualInformation(pm, c0, c1, n, cs))
-          case (Seq(), c1, ColCtx(_)) if c1.nonEmpty =>  // 1-col
-            varValueCol(pm, v => Estimators.mutualInformation(pm, Seq(v), c1, n, cs))
-          case (Seq(), Seq(), PairColCtx(_, subset)) =>  // 2-col
-            pairValueCol(pm, subset, (a, b) => Estimators.mutualInformation(pm, Seq(a), Seq(b), n, cs))
+          case (Seq(), c1, _: ColCtx) if c1.nonEmpty => frameValue(e, ctx)  // 1-col
+          case (Seq(), Seq(), _: PairColCtx) => frameValue(e, ctx)  // 2-col
           case _ => throw new IllegalArgumentException(
             "MUTUAL INFORMATION form does not match its context")
         }
@@ -2932,74 +2995,17 @@ object Planner {
         val cs = constraints.map { case (c, v) => c -> encodeConst(ctx, pm, c, v) }
         lit(Estimators.probabilityDensity(pm, t, cs))
 
-      case ExpBQLProbDensityFn(value, constraints) =>
+      case _: ExpBQLProbDensityFn =>
         ctx.bql match {
-          case ColCtx(_) =>
-            val v = evalConstDouble(ctx.bdb, value, ctx.binds)
-            val cs = constraints.map { case (c, x) =>
-              pm.colno(c) -> evalConstDouble(ctx.bdb, x, ctx.binds) }
-            varValueCol(pm, name => {
-              val colno = pm.colno(name)
-              val logs = pm.generators.map(g =>
-                g.backend.logpdfJoint(g.state, None, Seq(colno -> v), cs)).toArray
-              math.exp(graft.functions.SpecialMath.logMeanExp(logs))
-            })
+          case _: ColCtx => frameValue(e, ctx)
           case _ => throw new IllegalArgumentException(
             "PROBABILITY DENSITY OF VALUE requires a column context (ESTIMATE FROM VARIABLES OF)")
         }
 
       case ExpBQLProbEst(inner) =>
-        // macro: AVG over SIMULATE (expr) FROM MODELS OF p (reference:
-        // src/macro.py:26-34) — evaluated directly over the ensemble. In
-        // a VARIABLES OF context, 1-column estimator forms inside the
-        // event (`mutual information with x`, `dependence probability
-        // with x`) bind the row's variable as their implicit first
-        // column, so `ORDER BY probability of (mi with x > t)` ranks the
-        // variables (reference tests/test_approxest.py).
-        val gen = pm.generators.head
-        val ms = gen.state.modelNumbers
-        require(ms.nonEmpty, "PROBABILITY OF needs initialized models")
-        def avgFor(ast: Exp): Double = {
-          val vals = ms.map(m => evalModelExp(ctx.bdb, pm, m, ast, ctx.binds))
-          vals.sum / vals.length
-        }
-        // recursion mirrors the expression shapes the event grammar can
-        // nest an estimator under (operators, CASE, CAST, COLLATE,
-        // function calls, IN-lists) — not just ExpOp, so
-        // `probability of (abs(mutual information with x) > t)` binds
-        def hasImplicit(e: Exp): Boolean = e match {
-          case ExpBQLMutInf(Seq(), _, _, _) => true
-          case ExpBQLDepProb(None, Some(_)) => true
-          case ExpOp(_, os) => os.exists(hasImplicit)
-          case ExpApp(_, _, os) => os.exists(hasImplicit)
-          case ExpCast(x, _) => hasImplicit(x)
-          case ExpCollate(x, _) => hasImplicit(x)
-          case ExpInExp(x, _, xs) => hasImplicit(x) || xs.exists(hasImplicit)
-          case ExpCase(k, whens, els) =>
-            k.exists(hasImplicit) ||
-              whens.exists { case (w, t) => hasImplicit(w) || hasImplicit(t) } ||
-              els.exists(hasImplicit)
-          case _ => false
-        }
-        def bindVar(e: Exp, v: String): Exp = e match {
-          case ExpBQLMutInf(Seq(), c1, cs, n) => ExpBQLMutInf(Seq(v), c1, cs, n)
-          case ExpBQLDepProb(None, c1 @ Some(_)) => ExpBQLDepProb(Some(v), c1)
-          case ExpOp(op, os) => ExpOp(op, os.map(bindVar(_, v)))
-          case ExpApp(d, op, os) => ExpApp(d, op, os.map(bindVar(_, v)))
-          case ExpCast(x, t) => ExpCast(bindVar(x, v), t)
-          case ExpCollate(x, c) => ExpCollate(bindVar(x, v), c)
-          case ExpInExp(x, p, xs) =>
-            ExpInExp(bindVar(x, v), p, xs.map(bindVar(_, v)))
-          case ExpCase(k, whens, els) =>
-            ExpCase(k.map(bindVar(_, v)),
-              whens.map { case (w, t) => (bindVar(w, v), bindVar(t, v)) },
-              els.map(bindVar(_, v)))
-          case other => other
-        }
         ctx.bql match {
-          case ColCtx(_) if hasImplicit(inner) =>
-            varValueCol(pm, v => avgFor(bindVar(inner, v)))
-          case _ => lit(avgFor(inner))
+          case _: ColCtx if hasImplicitVar(inner) => frameValue(e, ctx)
+          case _ => lit(probabilityOf(ctx, pm, inner))
         }
 
       case other => throw new IllegalArgumentException(s"Unexpected BQL expression: $other")
@@ -3008,49 +3014,149 @@ object Planner {
 
   /** Dispatch a 2-column estimator family over its three forms:
     * OF a WITH b (const), WITH b (1-col), bare (2-col). */
-  private def colFn2(what: String, c0: Option[String], c1: Option[String],
-      ctx: Ctx, pm: PopulationModel)(f: (String, String) => Double): Column =
+  private def colFn2(what: String, e: Exp, c0: Option[String], c1: Option[String],
+      ctx: Ctx)(f: (String, String) => Double): Column =
     (c0, c1, ctx.bql) match {
       case (Some(a), Some(b), _) => lit(f(a, b))
-      case (None, Some(b), ColCtx(_)) => varValueCol(pm, v => f(v, b))
-      case (None, None, PairColCtx(_, subset)) => pairValueCol(pm, subset, f)
+      case (None, Some(_), _: ColCtx) | (None, None, _: PairColCtx) => frameValue(e, ctx)
       case _ => throw new IllegalArgumentException(
         s"$what form does not match its context" +
           " (const needs OF..WITH, 1-col needs VARIABLES OF, 2-col needs PAIRWISE VARIABLES OF)")
     }
 
-  /** 1-col estimator: per-variable driver values delivered as a broadcast
-    * map lookup (a closure-serialized Map, constant-time per row) rather
-    * than a nested when-chain — a 64-variable population would otherwise
-    * build a 64-deep Catalyst expression; the variable list itself is
-    * metadata-sized. */
-  private def varValueCol(pm: PopulationModel, f: String => Double): Column = {
-    val entries: Map[String, Double] =
-      pm.visibleVariables.map(v => Names.casefold(v.name) -> f(v.name)).toMap
-    val look = udf((n: String) => entries.get(Names.casefold(n)))
-    look(col("name"))
+  private def nullIfNaN(c: Column): Column = nanvl(c, lit(null).cast("double"))
+
+  /** The hidden column of the variables frame holding `e`'s per-row
+    * value (see [[variablesFrame]]). */
+  private def frameValue(e: Exp, ctx: Ctx): Column = {
+    val values = ctx.bql match {
+      case c: ColCtx => c.values
+      case c: PairColCtx => c.values
+      case _ => Map.empty[Exp, String]
+    }
+    col(values.getOrElse(e, throw new IllegalStateException(
+      s"Estimator was not computed into the variables frame: $e")))
   }
 
-  /** 2-col estimator: per-pair driver values → broadcast map lookup keyed
-    * by (name0, name1). A when-chain here is O(vars²)-deep — 4,096
-    * branches for a 64-column population, past Catalyst's comfortable
-    * analysis depth. Only the FOR-restricted subset (when present) is
-    * computed. */
-  private def pairValueCol(pm: PopulationModel, subset: Option[Seq[String]],
-      f: (String, String) => Double): Column = {
-    val all = pm.visibleVariables.map(_.name)
-    val vars = subset match {
-      case None => all
-      case Some(names) =>
-        val want = names.map(Names.casefold).toSet
-        all.filter(n => want(Names.casefold(n)))
+  /** The estimators under `e` (not inside subqueries, which plan in their
+    * own context) whose value depends on the row of a column context,
+    * each with the function computing that value from the row's variable
+    * names. */
+  private def rowEstimators(e: Exp, ctx: Ctx): Seq[(Exp, Seq[String] => Double)] =
+    rowValueFn(e, ctx) match {
+      case Some(f) => Seq(e -> f)
+      case None =>
+        val children = e match {
+          case ExpOp(_, os) => os
+          case ExpApp(_, _, os) => os
+          case ExpCase(k, ws, o) => k.toSeq ++ ws.flatMap(w => Seq(w._1, w._2)) ++ o
+          case ExpCast(x, _) => Seq(x)
+          case ExpCollate(x, _) => Seq(x)
+          case ExpInExp(x, _, es) => x +: es
+          case ExpInQuery(x, _, _) => Seq(x)
+          case _ => Nil
+        }
+        children.flatMap(rowEstimators(_, ctx))
     }
-    val entries: Map[(String, String), Double] =
-      (for (a <- vars; b <- vars)
-        yield (Names.casefold(a), Names.casefold(b)) -> f(a, b)).toMap
-    val look = udf((a: String, b: String) =>
-      entries.get((Names.casefold(a), Names.casefold(b))))
-    look(col("name0"), col("name1"))
+
+  /** Per-row value of a 1-col (VARIABLES OF) or 2-col (PAIRWISE
+    * VARIABLES OF) estimator form, as a function of the row's variable
+    * names; None for any other expression or context. */
+  private def rowValueFn(e: Exp, ctx: Ctx): Option[Seq[String] => Double] = {
+    def form2(c0: Option[String], c1: Option[String])(
+        f: (String, String) => Double): Option[Seq[String] => Double] =
+      (c0, c1, ctx.bql) match {
+        case (None, Some(b), _: ColCtx) => Some(vs => f(vs.head, b))
+        case (None, None, _: PairColCtx) => Some(vs => f(vs(0), vs(1)))
+        case _ => None
+      }
+    lazy val pm = pmOf(ctx.bql)
+    (e, ctx.bql) match {
+      case (ExpBQLDepProb(c0, c1), _) =>
+        form2(c0, c1)(Estimators.dependenceProbability(pm, _, _))
+      case (ExpBQLCorrel(c0, c1), _) => form2(c0, c1)(correlationValue(ctx, pm))
+      case (ExpBQLCorrelPval(c0, c1), _) => form2(c0, c1)(correlationPValue(ctx, pm))
+      case (mi @ ExpBQLMutInf(Seq(), c1, _, _), _: ColCtx) if c1.nonEmpty =>
+        val (n, cs) = miArgs(mi, ctx)
+        Some(vs => Estimators.mutualInformation(pm, Seq(vs.head), c1, n, cs))
+      case (mi @ ExpBQLMutInf(Seq(), Seq(), _, _), _: PairColCtx) =>
+        val (n, cs) = miArgs(mi, ctx)
+        Some(vs => Estimators.mutualInformation(pm, Seq(vs(0)), Seq(vs(1)), n, cs))
+      case (ExpBQLProbDensityFn(value, constraints), _: ColCtx) =>
+        val v = evalConstDouble(ctx.bdb, value, ctx.binds)
+        val cs = constraints.map { case (c, x) =>
+          pm.colno(c) -> evalConstDouble(ctx.bdb, x, ctx.binds) }
+        Some { vs =>
+          val colno = pm.colno(vs.head)
+          val logs = pm.generators.map(g =>
+            g.backend.logpdfJoint(g.state, None, Seq(colno -> v), cs)).toArray
+          math.exp(graft.functions.SpecialMath.logMeanExp(logs))
+        }
+      case (ExpBQLProbEst(inner), _: ColCtx) if hasImplicitVar(inner) =>
+        Some(vs => probabilityOf(ctx, pm, bindVar(inner, vs.head)))
+      case _ => None
+    }
+  }
+
+  /** USING n SAMPLES and GIVEN constraints of a MUTUAL INFORMATION. */
+  private def miArgs(mi: ExpBQLMutInf, ctx: Ctx): (Int, Seq[(String, Option[Double])]) = {
+    val pm = pmOf(ctx.bql)
+    val n = mi.nsamples.map(e => evalConstInt(ctx.bdb, e, ctx.binds)).getOrElse(1000)
+    val cs = mi.constraints.map {
+      case MiEquality(c, v) => c -> Some(encodeConst(ctx, pm, c, v))
+      case MiMarginal(c) => c -> None
+    }
+    (n, cs)
+  }
+
+  /** `PROBABILITY OF (event)` — macro: AVG over SIMULATE (event) FROM
+    * MODELS OF p (reference: src/macro.py:26-34), evaluated directly over
+    * the ensemble. */
+  private def probabilityOf(ctx: Ctx, pm: PopulationModel, event: Exp): Double = {
+    val ms = pm.generators.head.state.modelNumbers
+    require(ms.nonEmpty, "PROBABILITY OF needs initialized models")
+    val vals = ms.map(m => evalModelExp(ctx.bdb, pm, m, event, ctx.binds))
+    vals.sum / vals.length
+  }
+
+  /** In a VARIABLES OF context, 1-column estimator forms inside a
+    * PROBABILITY OF event (`mutual information with x`, `dependence
+    * probability with x`) take the row's variable as their implicit first
+    * column, so `ORDER BY probability of (mi with x > t)` ranks the
+    * variables (reference tests/test_approxest.py). The recursion mirrors
+    * the expression shapes the event grammar can nest an estimator under
+    * (operators, CASE, CAST, COLLATE, function calls, IN-lists), so
+    * `probability of (abs(mutual information with x) > t)` binds too. */
+  private def hasImplicitVar(e: Exp): Boolean = e match {
+    case ExpBQLMutInf(Seq(), _, _, _) => true
+    case ExpBQLDepProb(None, Some(_)) => true
+    case ExpOp(_, os) => os.exists(hasImplicitVar)
+    case ExpApp(_, _, os) => os.exists(hasImplicitVar)
+    case ExpCast(x, _) => hasImplicitVar(x)
+    case ExpCollate(x, _) => hasImplicitVar(x)
+    case ExpInExp(x, _, xs) => hasImplicitVar(x) || xs.exists(hasImplicitVar)
+    case ExpCase(k, whens, els) =>
+      k.exists(hasImplicitVar) ||
+        whens.exists { case (w, t) => hasImplicitVar(w) || hasImplicitVar(t) } ||
+        els.exists(hasImplicitVar)
+    case _ => false
+  }
+
+  /** Bind the implicit first column (see [[hasImplicitVar]]) to `v`. */
+  private def bindVar(e: Exp, v: String): Exp = e match {
+    case ExpBQLMutInf(Seq(), c1, cs, n) => ExpBQLMutInf(Seq(v), c1, cs, n)
+    case ExpBQLDepProb(None, c1 @ Some(_)) => ExpBQLDepProb(Some(v), c1)
+    case ExpOp(op, os) => ExpOp(op, os.map(bindVar(_, v)))
+    case ExpApp(d, op, os) => ExpApp(d, op, os.map(bindVar(_, v)))
+    case ExpCast(x, t) => ExpCast(bindVar(x, v), t)
+    case ExpCollate(x, c) => ExpCollate(bindVar(x, v), c)
+    case ExpInExp(x, p, xs) =>
+      ExpInExp(bindVar(x, v), p, xs.map(bindVar(_, v)))
+    case ExpCase(k, whens, els) =>
+      ExpCase(k.map(bindVar(_, v)),
+        whens.map { case (w, t) => (bindVar(w, v), bindVar(t, v)) },
+        els.map(bindVar(_, v)))
+    case other => other
   }
 
   private def correlationValue(ctx: Ctx, pm: PopulationModel)(a: String, b: String): Double = {

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 /** One generator fitted to a population: backend + immutable model state.
   * Small (O(cols × models)) and serializable — broadcast with the closure
   * of every per-row estimator UDF. */
@@ -46,10 +48,15 @@ final case class PopulationModel(
 }
 
 /** The BQL model-estimator operators (SURVEY §2.7), Spark-first:
-  * per-row estimators are UDFs closing over the (broadcast) ensemble;
-  * per-query constants are computed once on the driver; SIMULATE
-  * materializes driver-sampled rows into a DataFrame (the reference's
-  * temp-table winders disappear, src/compiler.py:711-722).
+  *  - per-row estimators (over table rows) are UDFs closing over the
+  *    broadcast ensemble and run in executor tasks;
+  *  - everything else is computed on the driver: per-query constants,
+  *    per-variable and per-pair values (the planner carries those as
+  *    columns of the variables frame), and SIMULATE's sampled rows.
+  *    A driver-computed result is handed to Spark as ONE LocalRelation
+  *    holding the values, so Catalyst folds filters, projections and
+  *    limits over it and collecting it runs no Spark job (the
+  *    reference's temp-table winders disappear, src/compiler.py:711-722).
   */
 object Estimators {
 
@@ -180,9 +187,11 @@ object Estimators {
 
   /** `SIMULATE cols FROM p [GIVEN ...] LIMIT n` (reference:
     * src/bqlfn.py:525-576): generators chosen multinomially by constraint
-    * likelihood, rows sampled on the driver and materialized as a
-    * DataFrame. Sampling cost is O(n × cols), independent of table size.
-    */
+    * likelihood, rows sampled on the driver and returned as one
+    * LocalRelation. Sampling cost is O(n × cols), independent of table
+    * size; a downstream operator still reads a large sample in parallel,
+    * as the local scan slices its rows over `defaultParallelism`
+    * partitions. */
   def simulate(
       spark: SparkSession, pm: PopulationModel,
       targets: Seq[String], constraints: Seq[(String, Double)],
@@ -225,12 +234,7 @@ object Estimators {
     val decoded = rows.map(r => Row.fromSeq(targets.zip(r).map {
       case (t, v) => decodeValue(pm, t, v)
     }))
-    // partition the materialized sample so downstream operators don't
-    // serialize on one core for large LIMITs (~1k rows per slice)
-    val slices = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, decoded.length / 1000))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(decoded, slices), schema)
+    spark.createDataFrame(decoded.asJava, schema)
   }
 
   /** `INFER c WITH CONFIDENCE conf FROM p` — macro semantics
@@ -379,7 +383,11 @@ object Estimators {
   }
 
   /** Ensemble row similarity: mean over generators of the per-model mean
-    * (reference: src/bqlfn.py:413-426). */
+    * (reference: src/bqlfn.py:413-426). NaN when either row is one the
+    * ensemble did not incorporate (outside the MCMC subsample); the BQL
+    * planner surfaces that NaN as NULL, for every SIMILARITY and
+    * PREDICTIVE RELEVANCE form alike, as the reference's SQLite stores a
+    * NaN result as NULL. */
   def similarityValue(pm: PopulationModel, rowid0: Long, rowid1: Long,
       colno: Int): Double = {
     val mnos = pm.modelnos
@@ -423,7 +431,9 @@ object Estimators {
   }
 
   /** Ensemble predictive relevance (reference: src/bqlfn.py:430-456 —
-    * mean over generators of per-model mean). */
+    * mean over generators of per-model mean). NaN when the target row is
+    * outside the MCMC subsample, or when there is nothing to compare it
+    * with; surfaced as NULL like SIMILARITY's (see [[similarityValue]]). */
   def predictiveRelevanceValue(pm: PopulationModel, rowidTarget: Long,
       rowidQuery: Seq[Long], hypotheticals: Seq[Seq[(Int, Double)]],
       colno: Int): Double = {

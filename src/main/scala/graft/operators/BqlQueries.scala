@@ -224,9 +224,10 @@ object BqlQueries {
         |ORDER BY c_custkey""".stripMargin)
   }
 
-  /** b08: SIMULATE materialization (rows-only; deterministic seed). */
+  /** b08: SIMULATE materialization (rows-only; deterministic seed). The
+    * target is disjoint from GIVEN: an overlapping one is a named error. */
   val b08Simulate: Q = (spark, dir) => bdb(spark, dir).execute(
-    "SIMULATE c_acctbal, c_nationkey FROM cpop GIVEN c_nationkey = 3 LIMIT 100")
+    "SIMULATE c_acctbal FROM cpop GIVEN c_nationkey = 3 LIMIT 100")
 
   /** b09: ESTIMATE ... FROM PAIRWISE VARIABLES OF (2-col context). */
   val b09PairwiseVars: Q = (spark, dir) => bdb(spark, dir).execute(

@@ -56,6 +56,19 @@ class ErrorSurfaceSpec extends AnyFunSuite {
       }).contains("nosuchbackend"))
   }
 
+  test("SIMULATE of a target also named in GIVEN is a named error, not a free draw") {
+    val b = new BayesDB(spark)
+    import spark.implicits._
+    b.registerTable("so", Seq((1.0, 2.0), (2.0, 3.5), (3.0, 6.1)).toDF("x", "y"))
+    b.execute("create population sop for so (x numerical; y numerical)")
+    b.execute("create generator sog for sop using nig_normal")
+    b.execute("initialize 1 model for sog")
+    val msg = messageOf(b.execute("simulate x, y from sop given X = 1.0 limit 2"))
+    assert(msg.contains("GIVEN") && msg.contains("x"), msg)
+    // disjoint targets still simulate
+    assert(b.execute("simulate y from sop given x = 1.0 limit 2").count() == 2)
+  }
+
   test("duplicate creation guarded; IF NOT EXISTS tolerated") {
     bdb.execute("create table dup as select 1 as a")
     assert(messageOf(bdb.execute("create table dup as select 2 as a"))

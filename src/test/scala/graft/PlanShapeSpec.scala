@@ -1,6 +1,7 @@
 package graft
 
 import graft.bql.BayesDB
+import graft.engine.Estimators
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scale-shape assertions on the plans the BQL planner emits:
@@ -124,12 +125,156 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("Join LeftOuter") && plan.contains("Aggregate"),
       s"theta decorrelation must plan as join+aggregate:\n$plan")
   }
+
+  // ---- driver-computed results: one LocalRelation, no job to hand back
+
+  /** A fitted CrossCat ensemble (x and y strongly dependent) whose
+    * driver-computed estimator results the pins below read. */
+  private lazy val est: BayesDB = {
+    val b = new BayesDB(spark, seed = 17L)
+    import spark.implicits._
+    val rng = new scala.util.Random(41)
+    val rows = (1 to 60).map { _ =>
+      val x = rng.nextGaussian()
+      (x, 2 * x + 0.1 * rng.nextGaussian(), rng.nextGaussian(), if (x > 0) "hi" else "lo")
+    }
+    b.registerTable("le", rows.toDF("x", "y", "z", "k"))
+    b.execute("create population lp for le (x numerical; y numerical; z numerical; k nominal)")
+    b.execute("create generator lg for lp using cgpm")
+    b.execute("initialize 4 models for lg")
+    b.execute("analyze lg for 4 iterations")
+    b
+  }
+
+  private def hasScalaUdf(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF])))
+
+  private def jobs(bql: String, binds: Seq[Any] = Nil): Int =
+    StatTestUtil.jobsLaunched(spark)(est.execute(bql, binds).collect())._2
+
+  test("column-context estimators plan as one LocalTableScan: no join, no UDF, no job") {
+    Seq(
+      "estimate dependence probability from pairwise variables of lp",
+      "estimate mutual information using 20 samples from pairwise variables of lp for x, y, z",
+      "estimate name, dependence probability with x as d," +
+        " mutual information with y using 20 samples as mi from variables of lp"
+    ).foreach { bql =>
+      val df = est.execute(bql)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("LocalTableScan") && !plan.contains("BroadcastNestedLoopJoin"),
+        s"$bql must plan as a local scan:\n$plan")
+      assert(!hasScalaUdf(df), s"$bql must not look its values up in a UDF")
+      assert(jobs(bql) == 0, s"$bql launched Spark jobs")
+    }
+  }
+
+  test("SIMULATE, ESTIMATE BY and FROM-less SELECT launch no Spark job") {
+    val sim = "simulate x, k from lp given y = 1.5 limit 50"
+    assert(est.execute(sim).queryExecution.executedPlan.toString.contains("LocalTableScan"))
+    assert(jobs(sim) == 0)
+    assert(jobs("simulate dependence probability of x with y as d from models of lp") == 0)
+    assert(jobs("estimate dependence probability of x with y by lp") == 0)
+    assert(jobs("select 1 + 1 as two") == 0)
+  }
+
+  test("SIMILARITY TO (rowid = k) launches exactly one job: the scan, no lookup") {
+    val q = "estimate rowid, similarity to (rowid = 3) in the context of x as s" +
+      " from lp where rowid <= 5"
+    assert(jobs(q) == 1)
+    assert(jobs(q.replace("rowid = 3", "rowid = ?"), Seq(3L)) == 1)
+    // PROBABILITY OF (similarity ...) resolves both rows once per model
+    assert(jobs("estimate probability of (similarity of (rowid = 1) to (rowid = 2)" +
+      " in the context of x > 0.5) by lp") == 0)
+  }
+
+  test("estimator frames hold exactly the values Estimators computes directly") {
+    val pm = est.populationModel("lp", None)
+    val vars = pm.visibleVariables.map(_.name)
+    def dep(a: String, b: String) = Estimators.dependenceProbability(pm, a, b)
+    def mi(a: String, b: String) = Estimators.mutualInformation(pm, Seq(a), Seq(b), 20)
+    def pairs(bql: String): Map[(String, String), Double] = est.execute(bql).collect()
+      .map(r => (r.getAs[String]("name0"), r.getAs[String]("name1")) -> r.getAs[Double]("value"))
+      .toMap
+    val depAll = pairs("estimate dependence probability from pairwise variables of lp")
+    assert(depAll == (for (a <- vars; b <- vars) yield (a, b) -> dep(a, b)).toMap)
+    val above = pairs("estimate dependence probability from pairwise variables of lp" +
+      " where dependence probability > 0.5")
+    assert(above.nonEmpty && above == depAll.filter(_._2 > 0.5))
+    val top = est.execute("estimate dependence probability from pairwise variables of lp" +
+      " order by dependence probability desc limit 3").collect().map(_.getAs[Double]("value"))
+    assert(top.toSeq == depAll.values.toSeq.sorted.reverse.take(3))
+    assert(pairs("estimate dependence probability from pairwise variables of lp for x, z") ==
+      (for (a <- Seq("x", "z"); b <- Seq("x", "z")) yield (a, b) -> dep(a, b)).toMap)
+    assert(pairs("estimate mutual information using 20 samples" +
+      " from pairwise variables of lp for x, y") ==
+      (for (a <- Seq("x", "y"); b <- Seq("x", "y")) yield (a, b) -> mi(a, b)).toMap)
+    val perVar = est.execute("estimate name, dependence probability with x as d," +
+      " mutual information with y using 20 samples as mi from variables of lp").collect()
+      .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+    assert(perVar == vars.map(v => v -> ((dep(v, "x"), mi(v, "y")))).toMap)
+  }
+
+  test("SIMULATE returns Estimators.simulate's sample; a large one stays partitioned") {
+    val pm = est.populationModel("lp", None)
+    val got = est.execute("simulate x, k from lp given y = 1.5 limit 40").collect()
+    val direct = Estimators.simulate(spark, pm, Seq("x", "k"), Seq("y" -> 1.5), 40).collect()
+    assert(got.toSeq == direct.toSeq)
+    val sizes = est.execute("simulate x, y from lp limit 5000").rdd
+      .mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.sum == 5000 && sizes.count(_ > 0) > 1,
+      s"a 5000-row sample must reach a downstream operator in several partitions: $sizes")
+  }
+
+  test("literal rowids: out of range is the named error without a job; user rowids keep the lookup") {
+    def sims(target: String, binds: Seq[Any] = Nil) = est.execute(
+      s"estimate rowid, similarity to ($target) in the context of x as s from lp" +
+        " where rowid <= 6 order by rowid", binds).collect().toSeq
+    // the literal, the bound parameter and the lookup forms agree
+    assert(sims("rowid = 4") == sims("rowid = 2 + 2"))
+    assert(sims("rowid = ?", Seq(4L)) == sims("_rowid_ = 2 + 2"))
+    for (k <- Seq(0, 61)) {
+      val (msg, n) = StatTestUtil.jobsLaunched(spark)(intercept[IllegalArgumentException](
+        est.execute(s"estimate similarity to (rowid = $k) in the context of x from lp"))
+        .getMessage)
+      assert(msg.contains("No row matches") && n == 0, s"rowid $k: $msg after $n jobs")
+    }
+    // a table that arrived with its own rowid column: ids 10, 20, ..., 80
+    val u = new BayesDB(spark, seed = 17L)
+    import spark.implicits._
+    u.registerTable("ue", (1 to 8).map(i => (i * 10L, i.toDouble, (i % 3).toDouble))
+      .toDF("rowid", "a", "b"))
+    assert(u.numberedRows("ue").isEmpty)
+    u.execute("create population up for ue (a numerical; b numerical)")
+    u.execute("create generator ug for up using cgpm")
+    u.execute("initialize 2 models for ug")
+    val self = u.execute("estimate similarity of (rowid = 20) to (rowid = 20)" +
+      " in the context of a by up").head().getDouble(0)
+    assert(self == 1.0)
+    val msg = intercept[IllegalArgumentException](u.execute(
+      "estimate similarity to (rowid = 2) in the context of a from up")).getMessage
+    assert(msg.contains("No row matches"))
+  }
+
+  test("the numbered row count follows its table through RENAME, DROP and ROLLBACK") {
+    val b = new BayesDB(spark, seed = 3L)
+    import spark.implicits._
+    b.registerTable("rc", (1 to 7).map(i => (i, i * 2.0)).toDF("i", "v"))
+    assert(b.numberedRows("rc").contains(7L))
+    b.execute("begin")
+    b.execute("alter table rc rename to rc2")
+    assert(b.numberedRows("rc").isEmpty && b.numberedRows("rc2").contains(7L))
+    b.execute("drop table rc2")
+    assert(b.numberedRows("rc2").isEmpty)
+    b.execute("rollback")
+    assert(b.numberedRows("rc").contains(7L) && b.numberedRows("rc2").isEmpty)
+  }
 }
 
 /** A dha-like wide population (reference fixture tests/dha.csv is 64
   * columns): PAIRWISE VARIABLES over 32 variables is 1,024 pairs — a
   * nested when-chain dispatch would build a 1,024-deep Catalyst
-  * expression; the map-lookup dispatch must handle it. */
+  * expression; the variables frame carries the values as rows instead. */
 class WidePopulationSpec extends AnyFunSuite {
   import TestSpark._
 

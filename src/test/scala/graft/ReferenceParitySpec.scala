@@ -409,6 +409,41 @@ class ReferenceParitySpec extends AnyFunSuite {
     assert(b7.execute("infer y from ps2 where _rowid_ = 1 or _rowid_ = 55").count() == 2)
   }
 
+  test("rows outside the subsample: SIMILARITY and PREDICTIVE RELEVANCE are NULL (test_subsample.py)") {
+    // the reference's SQLite stores the NaN these rows compute as NULL;
+    // both estimators, in every form, surface it the same way
+    val b = new BayesDB(spark, seed = 13L)
+    import spark.implicits._
+    val rng = new scala.util.Random(29)
+    b.registerTable("tn", (1 to 60).map { _ =>
+      val x = rng.nextGaussian(); (x, 2 * x + 0.1 * rng.nextGaussian())
+    }.toDF("x", "y"))
+    b.execute("create population pn for tn (x numerical; y numerical)")
+    b.execute("create generator gn for pn using cgpm (subsample 30)")
+    b.execute("initialize 2 models for gn")
+    b.execute("analyze gn for 2 iterations")
+    val inSub = b.populationModel("pn", None).generators.head.state
+      .asInstanceOf[graft.backends.CrossCat.CrossCatState].rowids.toSet
+    val in = inSub.min
+    val out = (1L to 60L).find(r => !inSub(r)).get
+    def rowForm(what: String): Map[Long, Option[Double]] = b.execute(
+      s"estimate rowid, $what in the context of x as v from pn" +
+        s" where rowid = $in or rowid = $out").collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+    for (what <- Seq(s"similarity to (rowid = $in)",
+        s"predictive relevance to existing rows (rowid = $in)")) {
+      val v = rowForm(what)
+      assert(v(out).isEmpty, s"$what of row $out outside the subsample: ${v(out)}")
+      assert(v(in).exists(x => !x.isNaN), s"$what of row $in: ${v(in)}")
+    }
+    def const(what: String): Any = b.execute(s"estimate $what in the context of x by pn").head().get(0)
+    assert(const(s"similarity of (rowid = $out) to (rowid = $in)") == null)
+    assert(const(s"predictive relevance of (rowid = $out) to existing rows (rowid = $in)") == null)
+    val pairwise = b.execute("estimate similarity in the context of x from pairwise pn" +
+      s" where r0.rowid = $out and r1.rowid = $in").head()
+    assert(pairwise.isNullAt(pairwise.fieldIndex("value")))
+  }
+
   test("ALTER GENERATOR MODELS (subset) scopes ensure commands (test_cgpm_alter.py:63-85)") {
     val b8 = new BayesDB(spark, seed = 19L)
     import spark.implicits._

@@ -123,4 +123,30 @@ object StatTestUtil {
     }
     graft.functions.SpecialMath.chi2Sf(chi2, (pooled.length - 1).toDouble)
   }
+
+  /** `body`'s result and the number of Spark jobs it launched, counted by
+    * a listener. Only jobs submitted from this thread under a fresh tag
+    * count, so actions of other threads never leak in; the bus is
+    * drained before the count is read, so none of `body`'s are missed. */
+  def jobsLaunched[A](spark: org.apache.spark.sql.SparkSession)(body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobCount"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (r, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
